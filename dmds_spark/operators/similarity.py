@@ -393,6 +393,15 @@ def centroids(
     )
 
 
+def _check_vector_dim(lengths: list, dim: int) -> None:
+    bad = sorted({n for n in lengths if n is not None and n != dim})
+    if bad:
+        raise ValueError(
+            f"kmeans_assign: every vector needs dim={dim} components, "
+            f"found lengths {bad}"
+        )
+
+
 def kmeans_assign(
     df: DataFrame,
     id_col: str,
@@ -424,7 +433,11 @@ def kmeans_assign(
     the argmin is `array_min` over (distance, index) structs — the
     same elementwise zip_with/left-fold arithmetic and the same
     least-by-(d, c) tie-break as the unfolded expression, so
-    assignments are bit-identical."""
+    assignments are bit-identical.
+
+    Every vector must have ``dim`` components: the collected seeds and
+    each M-step aggregate check it and raise ValueError (``iters=1``
+    runs no M-step, so there only the seeds are checked)."""
     if k < 1:
         raise ValueError(f"kmeans_assign: k must be >= 1, got {k}")
     seeds = (
@@ -435,6 +448,7 @@ def kmeans_assign(
     )
     if not seeds:
         raise ValueError("kmeans_assign: empty input (no seed vectors)")
+    _check_vector_dim([len(row[vec_col]) for row in seeds], dim)
     # fewer rows than k: every row is its own seed and the extra
     # clusters simply never exist — valid, documented degeneracy
     centers = [
@@ -482,19 +496,27 @@ def kmeans_assign(
         # mean is the same expression as centroids_long —
         # round(cast(exact-decimal-sum as double) / n, 6) — and decimal
         # addition is order-independent, so the doubles (and therefore
-        # every later assignment) are bit-identical. Assumes dense
-        # ``dim``-length vectors, which kmeans distances require anyway.
+        # every later assignment) are bit-identical. The same aggregate
+        # carries the vector-length range, so a vector whose length is
+        # not ``dim`` fails with a ValueError at no extra job (``get``
+        # reads a short vector's missing components as NULL instead of
+        # raising mid-aggregate).
         sums = [
             F.sum(
-                F.col(vec_col)[i].cast("double").cast("decimal(28,12)")
+                F.get(F.col(vec_col), i).cast("double").cast("decimal(28,12)")
             ).alias(f"__s{i}")
             for i in range(dim)
         ]
         agg = assigned.groupBy("cluster").agg(
-            *sums, F.count(F.lit(1)).alias("__n")
+            *sums,
+            F.count(F.lit(1)).alias("__n"),
+            F.min(F.size(vec_col)).alias("__lmin"),
+            F.max(F.size(vec_col)).alias("__lmax"),
         )
         mrows = agg.select(
             "cluster",
+            "__lmin",
+            "__lmax",
             *[
                 F.round(
                     F.col(f"__s{i}").cast("double") / F.col("__n"), 6
@@ -502,6 +524,9 @@ def kmeans_assign(
                 for i in range(dim)
             ],
         ).collect()
+        _check_vector_dim(
+            [r[c] for r in mrows for c in ("__lmin", "__lmax")], dim
+        )
         new_centers = {
             int(r["cluster"]): [float(r[f"__m{i}"]) for i in range(dim)]
             for r in mrows

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 90g, or
+    three quarters of physical memory on a smaller box (a heap past
+    RAM swaps or gets the JVM killed instead of failing cleanly)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(90 << 10, phys * 3 // 4 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "dmds_spark",
     master: str | None = None,
@@ -44,7 +52,10 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # plan introspection (plans/inspect.py) needs untruncated
         # FileScan metadata (PushedFilters/ReadSchema lines)
@@ -69,7 +80,11 @@ def release_materialized_state(spark: SparkSession) -> int:
     died; across a long session (bench loop, notebook) that backlog
     inflates the heap and turns into multi-second GC pauses landing on
     unrelated queries. Calling this between queries makes memory usage
-    per-query, not per-session. Returns the number of RDDs released."""
+    per-query, not per-session. Returns the number of RDDs released.
+
+    Any live checkpoint goes too, including the resolved pending
+    buffer a ``World`` keeps between writes: flush every World with
+    pending ops before calling this."""
     jsc = spark.sparkContext._jsc
     rdds = list(jsc.getPersistentRDDs().values())
     for rdd in rdds:

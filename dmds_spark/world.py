@@ -456,6 +456,8 @@ class World:
         # (src/world.rs:254) with explicit op ordering instead of locks
         self._ops: list[tuple[int, str, DataFrame]] = []
         self._seq = 0
+        # (generation key, live, touched) — see _resolved_pending()
+        self._pending_memo: tuple | None = None
         # cross-process single-writer token + per-path flush mutex,
         # interned so every World on this path shares BOTH (see
         # WriterLock for the protocol and its failure modes); the token
@@ -1010,14 +1012,31 @@ class World:
     def _resolved_pending(self) -> tuple[DataFrame | None, DataFrame | None]:
         """Collapse the op log to (latest upsert rows, all touched ids).
         Latest op per id wins — a window over __seq, the deterministic
-        replacement for the reference's chunk/item write locks."""
-        if not self._ops:
+        replacement for the reference's chunk/item write locks.
+
+        Resolved once per op-log GENERATION (one unchanged log) and
+        shared: the first consumer pays the union + window + barrier,
+        every later read, ``chunk_states``, zone-map ``read_where`` and
+        the ``flush`` that persists the generation reuse the same pair
+        — the reference resolves its dirty buffer pool once and merges
+        it into every read until the flush (src/world/iter.rs:726-750).
+        A generation is keyed on (first seq, last seq, length) of one
+        snapshot of the log: seqs only grow, so any append, flush or
+        reset yields a new key and a stale pair is never served. The
+        flush that commits a generation drops the memo so its
+        checkpoint blocks can be collected."""
+        ops = list(self._ops)
+        if not ops:
             return None, None
+        key = (ops[0][0], ops[-1][0], len(ops))
+        memo = self._pending_memo
+        if memo is not None and memo[0] == key:
+            return memo[1], memo[2]
         from pyspark.sql import Window as W
 
         id_col = self.spec.id_dim.name
         parts = []
-        for seq, kind, df in self._ops:
+        for seq, kind, df in ops:
             if kind == "upsert":
                 parts.append(
                     df.withColumn("__seq", F.lit(seq)).withColumn("__del", F.lit(False))
@@ -1044,13 +1063,13 @@ class World:
         for p in aligned[1:]:
             log = log.unionByName(p)
         w = W.partitionBy(id_col).orderBy(F.col("__seq").desc())
-        # materialize the collapsed log ONCE: its consumers (live for
-        # the merge/new-partition sides, touched for the dirty/anti
-        # joins) would otherwise each re-run every pending op's source
-        # plan — a CDC merge buffers the whole net-changes pipeline
-        # here, and flush consumed it four times (guide §2.4). The
+        # the generation's one barrier: live (merge/new-partition
+        # sides) and touched (dirty/anti joins) of every consumer read
+        # it instead of re-running each pending op's source plan — a
+        # CDC merge buffers the whole net-changes pipeline here. The
         # barrier is micro-batch-sized (the pending buffer), never
-        # table-sized.
+        # table-sized, and the rows a flush writes are exactly the
+        # rows the generation's pending reads returned.
         latest = (
             log.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -1065,6 +1084,7 @@ class World:
         for d in self.spec.dims:
             if d.name not in live.columns:
                 live = live.withColumn(d.name, F.lit(None).cast(d.spark_type))
+        self._pending_memo = (key, live, touched)
         return live, touched
 
     @staticmethod
@@ -1305,21 +1325,26 @@ class World:
         With ``validate="flush"`` the domain check rides along as
         raise_error guards in the same pass. Returns ops flushed."""
         with self._lock:
-            if not self._ops:
+            n_ops = len(self._ops)
+            if not n_ops:
                 return 0
             try:
-                n = self._flush_locked()
+                self._flush_locked()
             except ValueOutOfRangeError:
                 raise
             except Exception as e:  # noqa: BLE001 — guard translation
                 self._reraise_domain(e)
+            # committed: the generation's ops and its resolved pair are
+            # done (dropping the memo frees its checkpoint blocks); a
+            # failed flush leaves both intact for a retry or a read
+            self._ops = []
+            self._pending_memo = None
             # new on-disk state: invalidate every same-process World's
             # cached base relation (the interned version is the key)
             self._writer_lock.data_version += 1
-            return n
+            return n_ops
 
-    def _flush_locked(self) -> int:
-        n_ops = len(self._ops)
+    def _flush_locked(self) -> None:
         live, touched = self._resolved_pending()
         if self.validate == "flush" and live is not None:
             live = self._domain_guard(live)
@@ -1344,8 +1369,7 @@ class World:
                     .option("partitionOverwriteMode", "dynamic")
                     .parquet(self.path)
                 )
-            self._ops = []
-            return n_ops
+            return
 
         # dirty physical partitions = those holding any touched id
         # (old location: deletes/relocations) or any new row (new
@@ -1370,8 +1394,7 @@ class World:
         dirty_rows = old_parts.unionByName(new_parts).distinct().collect()
         dirty = [tuple(r) for r in dirty_rows]
         if not dirty:
-            self._ops = []
-            return n_ops
+            return
         dirty_df = self.spark.createDataFrame(dirty_rows, old_parts.schema)
 
         base_part = base.join(
@@ -1388,8 +1411,7 @@ class World:
             self._commit_version_write(
                 out, {"/".join(str(int(x)) for x in pos) for pos in dirty}
             )
-            self._ops = []
-            return n_ops
+            return
         # STAGE-AND-SWAP instead of materialize-then-self-overwrite:
         # ``out`` reads the very files a dynamic overwrite of
         # ``self.path`` would delete, which forced an eager
@@ -1407,7 +1429,14 @@ class World:
         # dirty partition held relocated away, clear it (the reference
         # rewrites every dirty chunk, even to empty:
         # src/world.rs:96-122 skips moved items but still writes).
+        #
+        # The swap never deletes an old partition before every swap has
+        # succeeded: each is renamed ASIDE first, and a failure at any
+        # partition moves the new ones out and the old ones back, so
+        # the world reads its complete pre-flush state and the ops stay
+        # pending for a retry.
         staging = f"{self.path}.staging-{uuid.uuid4().hex[:12]}"
+        aside = f"{staging}.aside"
         try:
             (
                 out.write.partitionBy(*self.partition_cols())
@@ -1415,27 +1444,34 @@ class World:
                 .parquet(staging)
             )
             self._writer_lock.verify_token()  # fence the swap
-            for pos in dirty:
-                dst = self._part_dir(pos)
-                src = "/".join(
-                    [staging]
-                    + [
-                        f"{c}={int(v)}"
-                        for c, v in zip(self.partition_cols(), pos)
-                    ]
-                )
-                shutil.rmtree(dst, ignore_errors=True)
-                if os.path.isdir(src):
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    shutil.move(src, dst)
+            swapped = []  # (dst, its aside copy or None), in swap order
+            try:
+                for pos in dirty:
+                    dst = self._part_dir(pos)
+                    src = self._part_dir(pos, staging)
+                    old = None
+                    if os.path.isdir(dst):
+                        old = self._part_dir(pos, aside)
+                        os.makedirs(os.path.dirname(old), exist_ok=True)
+                        os.rename(dst, old)
+                    swapped.append((dst, old))
+                    if os.path.isdir(src):
+                        os.makedirs(os.path.dirname(dst), exist_ok=True)
+                        shutil.move(src, dst)
+            except BaseException:
+                for dst, old in reversed(swapped):
+                    shutil.rmtree(dst, ignore_errors=True)
+                    if old is not None:
+                        os.rename(old, dst)
+                shutil.rmtree(aside, ignore_errors=True)  # now empty dirs
+                raise
+            shutil.rmtree(aside, ignore_errors=True)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        self._ops = []
-        return n_ops
 
-    def _part_dir(self, pos) -> str:
+    def _part_dir(self, pos, root: str | None = None) -> str:
         return "/".join(
-            [self.path]
+            [root or self.path]
             + [f"{c}={int(v)}" for c, v in zip(self.partition_cols(), pos)]
         )
 

@@ -8,6 +8,12 @@ SF_DIR_SMALL = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running streaming test (still part of the default run)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -348,3 +348,27 @@ def test_kmeans_degenerate_inputs(spark):
     out = kmeans_assign(few, "vec_id", "embedding", k=8, iters=1)
     assert out.count() == 3
     assert out.select("cluster").distinct().count() <= 3
+
+
+def test_kmeans_rejects_wrong_length_vectors(spark):
+    """A vector shorter or longer than ``dim`` fails with a ValueError
+    naming the lengths, whether it is a seed (checked on the collected
+    seeds) or not (checked by the M-step aggregate) — never a
+    mid-loop index or TypeError."""
+    import hashlib
+
+    import pytest as _pytest
+
+    dim = 4
+    ids = list(range(8))
+    # k=1 seeds on the smallest md5(id): the bad row is never the seed,
+    # so only the M-step aggregate can catch it; k=8 makes it a seed
+    last = max(ids, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    for bad in ([1.0, 2.0, 3.0], [1.0, 2.0, 3.0, 4.0, 5.0]):
+        rows = [
+            (i, bad if i == last else [float(i), 1.0, 0.0, 2.0]) for i in ids
+        ]
+        df = spark.createDataFrame(rows, "id long, v array<double>")
+        for k in (1, 8):
+            with _pytest.raises(ValueError, match=rf"dim=4 .*\[{len(bad)}\]"):
+                kmeans_assign(df, "id", "v", k=k, iters=2, dim=dim)

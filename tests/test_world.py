@@ -446,3 +446,150 @@ def test_base_relation_cache_and_cross_instance_invalidation(spark, tmp_path):
     assert a._base() is not b2 or a._base() is a._base()
     a.close()
     b.close()
+
+
+def _vrows(df):
+    return sorted((r["dim0"], r["dim1"], r["v"]) for r in df.collect())
+
+
+@pytest.fixture()
+def count_resolutions(monkeypatch):
+    """Count op-log resolutions: each one pays exactly one
+    ``materialize`` barrier in ``World._resolved_pending``."""
+    import dmds_spark.world as world_mod
+
+    calls = []
+    real = world_mod.materialize
+
+    def counting(df, **kw):
+        calls.append(1)
+        return real(df, **kw)
+
+    monkeypatch.setattr(world_mod, "materialize", counting)
+    return calls
+
+
+def test_pending_resolved_once_per_generation(spark, world, count_resolutions):
+    """One unchanged op log is resolved ONCE: k pending gets, a
+    chunk_states(), a zone-map read_where and the flush that persists
+    the generation share one barrier; every new op starts a new
+    generation; a flush or a direct log reset never leaves a stale
+    pair to be served."""
+    calls = count_resolutions
+    world.insert_rows([{"dim0": i, "dim1": 3 * i, "v": i} for i in range(16)])
+    world.flush()
+    calls.clear()
+
+    world.insert_rows([{"dim0": 2, "dim1": 700, "v": 200},
+                       {"dim0": 40, "dim1": 1, "v": 400}])
+    for _ in range(3):
+        assert _vrows(world.get(2)) == [(2, 700, 200)]
+    assert _vrows(world.get(40)) == [(40, 1, 400)]
+    states = {
+        (r["c0"], r["c1"]): (r["pending_upserts"], r["pending_deletes"])
+        for r in world.chunk_states().collect()
+    }
+    assert states == {(0, 0): (0, 1), (0, 43): (1, 0), (5, 0): (1, 0)}
+    assert _vrows(world.read_where({"v": (100, 500)})) == [
+        (2, 700, 200), (40, 1, 400)
+    ]
+    assert len(calls) == 1
+    world.flush()
+    assert len(calls) == 1  # the flush reused the generation's pair
+    assert world._pending_memo is None  # dropped at commit
+
+    # every new op is a new generation: one more resolution each
+    world.upsert(spark.createDataFrame([(5, 5, 55)], ["dim0", "dim1", "v"]))
+    assert _vrows(world.get(5)) == [(5, 5, 55)]
+    assert len(calls) == 2
+    world.delete_ids([5])
+    assert _vrows(world.get(5)) == []
+    assert _vrows(world.get(5)) == []
+    assert len(calls) == 3
+
+    # after a flush reads see disk only, never the flushed generation
+    world.flush()
+    assert _vrows(world.get(5)) == []
+    assert _vrows(world.get(2)) == [(2, 700, 200)]
+    assert len(calls) == 3
+
+    # a direct log reset: the dropped op never reappears, and the next
+    # op's generation is resolved afresh
+    world.insert_rows([{"dim0": 7, "dim1": 9, "v": 70}])
+    assert _vrows(world.get(7)) == [(7, 9, 70)]
+    world._ops = []
+    assert _vrows(world.get(7)) == [(7, 21, 7)]
+    world.insert_rows([{"dim0": 8, "dim1": 9, "v": 80}])
+    assert _vrows(world.get(7)) == [(7, 21, 7)]
+    assert _vrows(world.get(8)) == [(8, 9, 80)]
+    world._ops = []
+    world.close()
+
+
+def test_failed_flush_keeps_generation(spark, world, count_resolutions):
+    """A flush rejected by the domain guard leaves the ops AND their
+    resolved pair valid: pending reads stay correct without a new
+    resolution, and a later generation flushes cleanly."""
+    calls = count_resolutions
+    world.insert_rows([{"dim0": 1, "dim1": 1, "v": 1}])
+    world.flush()
+    calls.clear()
+    world.insert_rows([{"dim0": 1, "dim1": 2, "v": 10}])
+    world.insert_rows([{"dim0": 3, "dim1": 2000, "v": 30}])  # out of range
+    with pytest.raises(ValueOutOfRangeError):
+        world.flush()
+    assert world.writes == 2
+    assert _vrows(world.get(1)) == [(1, 2, 10)]
+    assert len(calls) == 1  # the failed flush's pair, reused
+    world.delete_ids([3])
+    assert world.flush() == 3
+    assert len(calls) == 2
+    w2 = World(spark, spec_1024(), world.path, physical_factors=(1, 1))
+    assert _vrows(w2.snapshot()) == [(1, 2, 10)]
+    world.close()
+
+
+def test_flush_swap_failure_restores_pre_flush_state(spark, tmp_path, monkeypatch):
+    """Fault injection on the stage-and-swap publish: the move of
+    partition k of n raises. The flush must roll back every swapped
+    partition, so a fresh World reads the complete pre-flush state
+    (every row, old values), the ops stay pending, no staging debris
+    is left, and a retry publishes the new state."""
+    import shutil
+
+    path = str(tmp_path / "w")
+    w = World(spark, spec_1024(), path, physical_factors=(1, 1))
+    before = [(i, 5, i) for i in range(32)]  # 4 partitions: c0=0..3
+    w.upsert(spark.createDataFrame(before, ["dim0", "dim1", "v"]))
+    w.flush()
+    after = [(i, 5, 100 + i) if i % 2 == 0 else (i, 5, i) for i in range(32)]
+    w.upsert(spark.createDataFrame(
+        [r for r in after if r[2] >= 100], ["dim0", "dim1", "v"]
+    ))
+
+    real_move = shutil.move
+    moves = []
+
+    def flaky_move(src, dst, *a, **kw):
+        moves.append(dst)
+        if len(moves) == 3:
+            raise OSError("injected move failure")
+        return real_move(src, dst, *a, **kw)
+
+    monkeypatch.setattr(shutil, "move", flaky_move)
+    with pytest.raises(OSError, match="injected"):
+        w.flush()
+    monkeypatch.setattr(shutil, "move", real_move)
+    assert len(moves) == 3  # failed on partition 3 of 4
+
+    fresh = World(spark, spec_1024(), path, physical_factors=(1, 1))
+    got = _vrows(fresh.snapshot())
+    assert len(got) == len(before)  # row conservation
+    assert got == before
+    assert not [e for e in os.listdir(tmp_path) if ".staging-" in e]
+    assert w.writes == 1
+
+    assert w.flush() == 1  # the retry publishes the new state
+    again = World(spark, spec_1024(), path, physical_factors=(1, 1))
+    assert _vrows(again.snapshot()) == after
+    w.close()

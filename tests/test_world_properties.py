@@ -1,7 +1,9 @@
 """Property-based World semantics (SURVEY.md §5 strategy (d)): random
 op sequences (upsert with relocation, delete, interspersed flushes)
 must leave the world equal to a trivial dict model — id uniqueness and
-value-predicate reads included.
+value-predicate reads included. ``read`` ops check a snapshot and a
+point get against the model in the middle of a sequence, while ops
+are pending, so a resolution reused past a later write would show.
 
 The reference invariants under test: upsert keyed on dim 0
 (src/world.rs:553-567), dim mutation relocates the row to its new
@@ -24,10 +26,15 @@ OPS = st.lists(
         st.tuples(st.just("upsert"), IDS, VALS),
         st.tuples(st.just("delete"), IDS, st.just(0)),
         st.tuples(st.just("flush"), st.just(0), st.just(0)),
+        st.tuples(st.just("read"), IDS, st.just(0)),
     ),
     min_size=1,
     max_size=12,
 )
+
+
+def _pairs(df) -> set:
+    return {(int(r["d0"]), r["d1"]) for r in df.select("d0", "d1").collect()}
 
 
 @settings(
@@ -47,10 +54,12 @@ def test_world_matches_model(spark, tmp_path_factory, ops):
         elif kind == "delete":
             w.delete_ids([i])
             model.pop(i, None)
+        elif kind == "read":
+            assert _pairs(w.snapshot()) == set(model.items())
+            assert _pairs(w.get(i)) == ({(i, model[i])} if i in model else set())
         else:
             w.flush()
-    got = {(r["d0"], r["d1"]) for r in w.snapshot().select("d0", "d1").collect()}
-    assert got == set(model.items())
+    assert _pairs(w.snapshot()) == set(model.items())
     # value-predicate read agrees with the model (relocated rows are
     # found at their NEW dim value, never the old one)
     lo, hi = 64, 191
@@ -88,13 +97,14 @@ def test_u64_world_matches_model(spark, tmp_path_factory, ops):
         elif kind == "delete":
             w.delete_ids([uid])
             model.pop(uid, None)
+        elif kind == "read":
+            assert _pairs(w.snapshot()) == set(model.items())
+            assert _pairs(w.get(uid)) == (
+                {(uid, model[uid])} if uid in model else set()
+            )
         else:
             w.flush()
-    got = {
-        (int(r["d0"]), r["d1"])
-        for r in w.snapshot().select("d0", "d1").collect()
-    }
-    assert got == set(model.items())
+    assert _pairs(w.snapshot()) == set(model.items())
     lo, hi = 64, 191
     sel = w.select(1, (lo, hi))
     read = {
