@@ -82,48 +82,28 @@ def _lit_back(kind: str, v):
     return F.lit(v)
 
 
-def _part_key(pcols, row) -> str:
-    # values-only key ("3/7"), the same convention as World._part_key
-    # and the versioned manifest's owner map
-    return "/".join(str(int(row[c])) for c in pcols)
-
-
 def _fingerprints(world) -> dict[str, str]:
     """Current per-partition content fingerprint, driver-side metadata
     only. Versioned worlds: the owning snapshot version IS the
     fingerprint (a partition's bytes change only via a new commit).
-    Plain worlds: hash of the sorted (file, size, mtime_ns) listing."""
-    out: dict[str, str] = {}
+    Plain worlds: hash of the sorted (file, size, mtime_ns) listing of
+    each partition directory ``World._partitions`` finds."""
     if world.versioned:
         owner = world._read_owner(world.current_version())
         return {k: f"v{v}" for k, v in owner.items()}
-    root = world.path
-    if not os.path.isdir(root):
-        return out
-    ncols = len(world.partition_cols())
-
-    def walk(d: str, depth: int, key_parts: list[str]):
+    out: dict[str, str] = {}
+    for key, leaf in world._partitions(world.path).items():
         try:
-            entries = sorted(os.scandir(d), key=lambda e: e.name)
+            entries = sorted(os.scandir(leaf), key=lambda e: e.name)
         except FileNotFoundError:
-            return
-        if depth == ncols:
-            h = hashlib.sha256()
-            for e in entries:
-                if e.name.startswith(("_", ".")):
-                    continue
-                st = e.stat()
-                h.update(
-                    f"{e.name}:{st.st_size}:{st.st_mtime_ns}".encode()
-                )
-            out["/".join(key_parts)] = h.hexdigest()[:16]
-            return
+            continue  # swapped away since the listing
+        h = hashlib.sha256()
         for e in entries:
-            if e.is_dir() and "=" in e.name and not e.name.startswith("_"):
-                val = str(int(e.name.split("=", 1)[1]))
-                walk(e.path, depth + 1, key_parts + [val])
-
-    walk(root, 0, [])
+            if e.name.startswith(("_", ".")):
+                continue
+            st = e.stat()
+            h.update(f"{e.name}:{st.st_size}:{st.st_mtime_ns}".encode())
+        out[key] = h.hexdigest()[:16]
     return out
 
 
@@ -206,7 +186,7 @@ def refresh(world, cols: list[str]) -> dict:
                     lo, hi = r[f"__lo_{c}"], r[f"__hi_{c}"]
                     if lo is not None:
                         zones[c] = [lo, hi]
-                k = _part_key(pcols, r)
+                k = world._part_key(r)
                 parts[k] = {"fp": cur_fp.get(k, ""), "zones": zones}
             # stale partitions that vanished from the scan (all rows
             # deleted) keep no entry; cur_fp-only keys with no rows get

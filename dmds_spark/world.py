@@ -17,9 +17,10 @@ Mapping (SURVEY.md §1.5):
 - relocation (``Lazy::close``, src/world/iter.rs:193-211) is automatic:
   partition columns are recomputed from the new dim values at flush;
 - flush (``Chunk::write_buf`` + ``FsHandle::write_chunk``,
-  src/world.rs:96-122, tokio-fs/src/lib.rs:85-107) is a
-  dynamic-partition-overwrite rewrite of exactly the dirty chunks —
-  the same whole-chunk-rewrite granularity as the reference.
+  src/world.rs:96-122, tokio-fs/src/lib.rs:85-107) rewrites exactly
+  the dirty chunks — the same whole-chunk-rewrite granularity as the
+  reference — and, like its one write routine, every World write
+  (first flush, flush, compact) publishes through ``World._publish``.
 
 Scale design (100 TB): a huge logical grid must not produce millions of
 tiny files, so each dimension takes a ``physical_factor`` that groups
@@ -39,6 +40,7 @@ import threading
 import time
 import uuid
 from typing import Iterable, Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +54,7 @@ from dmds_spark.core.errors import (
     WorldLockedError,
 )
 from dmds_spark.core.engine import materialize
+from dmds_spark.operators.rollup import _norm_path
 
 
 class WriterLock:
@@ -62,15 +65,15 @@ class WriterLock:
     directory (``<path>.lockd/``), never inside the Spark-owned data
     directory: a static-mode ``INSERT OVERWRITE`` deletes the whole
     target directory before writing, and round 14 proved a lock stored
-    inside it gets wiped by the engine's own first flush under a
-    default-config session (``partitionOverwriteMode=STATIC``), fencing
-    the writer against its own write. Mutual-exclusion state must not
+    inside it got wiped by an in-place first flush under Spark's
+    default (static) overwrite mode, fencing the writer against its
+    own write. Mutual-exclusion state must not
     share a directory with data any engine rewrite can clobber. The in-process ``threading.Lock``
     serializes flush-vs-writer within one session (the reference's
     ``lock_w``, src/world.rs:58, guards a single process the same
     way); THIS lock extends the single-writer discipline across
-    processes sharing the filesystem, which chunk-granularity dynamic
-    partition overwrite requires (two writers flushing from different
+    processes sharing the filesystem, which chunk-granularity partition
+    rewrites require (two writers flushing from different
     base snapshots would silently drop each other's rows).
 
     Process-wide interning (``WriterLock.for_dir``): every ``World``
@@ -111,8 +114,9 @@ class WriterLock:
       ``WorldFencedError`` if the token changed — a live writer whose
       lock was broken (manually or by lease reclaim) aborts BEFORE
       clobbering the new holder's state. The residual window is the
-      non-versioned dynamic partition overwrite itself, which is not
-      atomic: the check runs before the write starts, so prefer
+      non-versioned partition swap itself, a sequence of directory
+      renames that is not atomic as a whole: the check runs after the
+      staging write and before the first rename, so prefer
       ``versioned=True`` worlds where concurrent breakers are a real
       possibility (their data writes land in fresh ``_v{N}`` dirs and
       only the verified manifest flip publishes them)."""
@@ -367,7 +371,7 @@ class WriterLock:
         """Fencing check for commit points: re-read the lock file and
         raise ``WorldFencedError`` unless it still carries OUR token.
         Called immediately before every manifest/pointer flip and
-        before a non-versioned partition overwrite starts, so a writer
+        before a non-versioned partition swap starts, so a writer
         whose lock was broken or lease-reclaimed mid-write aborts
         instead of clobbering the new holder's state."""
         holder = self._holder()
@@ -444,7 +448,12 @@ class World:
         # per-directory reads are unaffected.
         self.versioned = bool(versioned)
         self._dim_index = {d.name: i for i, d in enumerate(spec.dims)}
-        self.path = path
+        # the publish swap, manifests, zone-map sidecar and writer lock
+        # are all local-FS calls: refuse a path they cannot publish to
+        # safely instead of failing at the first rename
+        if urlparse(path).scheme not in ("", "file"):
+            raise ValueError(f"World paths must be local, got {path!r}")
+        self.path = _norm_path(path)
         if physical_factors is None:
             # default: bound physical partition count to ~4096 dirs total
             physical_factors = self._default_factors(spec)
@@ -462,7 +471,7 @@ class World:
         # interned so every World on this path shares BOTH (see
         # WriterLock for the protocol and its failure modes); the token
         # is taken lazily at the first mutating op, held until close()
-        self._writer_lock = WriterLock.for_dir(path)
+        self._writer_lock = WriterLock.for_dir(self.path)
         self._lock = self._writer_lock.mutex  # reference lock_w, src/world.rs:58
         self._writer_ref = False
         # (version, DataFrame|None) — see _base(); keyed on the
@@ -626,23 +635,33 @@ class World:
     # -- lifecycle -----------------------------------------------------------
 
     def exists(self) -> bool:
-        """True iff the world has any persisted data files. Uses the
-        Hadoop FileSystem API so any supported scheme (file/hdfs/s3a)
-        works; empty partition-directory skeletons don't count."""
+        """True iff the world has any persisted data files; empty
+        partition-directory skeletons don't count."""
         if self.versioned:
             v = self.current_version()
             return v > 0 and bool(self._read_owner(v))
-        jvm = self.spark.sparkContext._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = jpath.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return False
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            name = it.next().getPath().getName()
-            if name.endswith(".parquet"):
-                return True
-        return False
+        return bool(self._partitions(self.path))
+
+    def _partitions(self, root: str) -> dict[str, str]:
+        """Partition key ("3/7") -> leaf directory, for every
+        ``c0=../c1=..`` leaf under ``root`` that holds parquet. The one
+        directory lister behind ``exists``, the publish swap, version
+        commits and zone-map fingerprints (local FS, like the
+        manifests; bounded by the ~4096 physical-partition cap)."""
+        pcols = self.partition_cols()
+        out = {}
+        for d, subdirs, files in os.walk(root):
+            rel = os.path.relpath(d, root)
+            segs = [] if rel == "." else rel.split(os.sep)
+            if len(segs) < len(pcols):
+                prefix = pcols[len(segs)] + "="
+                subdirs[:] = [s for s in subdirs if s.startswith(prefix)]
+                continue
+            subdirs.clear()
+            if any(f.endswith(".parquet") for f in files):
+                key = "/".join(str(int(s.split("=", 1)[1])) for s in segs)
+                out[key] = d
+        return out
 
     def _base(self) -> DataFrame | None:
         """The persisted base relation, cached per on-disk-state
@@ -810,11 +829,11 @@ class World:
         out.write.partitionBy(*self.partition_cols()).mode(
             "overwrite"
         ).parquet(self._version_dir(v))
-        # partition keys from the written directory tree (no Spark job;
-        # bounded by the ~4096 physical-partition cap) — also correct
-        # when the write is EMPTY (all dirty rows deleted): zero keys,
-        # so the dirty partitions simply drop out of the manifest
-        written = self._written_partitions(self._version_dir(v))
+        # partition keys from the written directory tree (no Spark job)
+        # — also correct when the write is EMPTY (all dirty rows
+        # deleted): zero keys, so the dirty partitions simply drop out
+        # of the manifest
+        written = self._partitions(self._version_dir(v))
         owner = {
             k: ov
             for k, ov in (self._read_owner(cur) if cur else {}).items()
@@ -823,25 +842,6 @@ class World:
         owner.update({k: v for k in written})
         self._commit_snapshot(v, owner)
         return v
-
-    def _written_partitions(self, vdir: str) -> list[str]:
-        """Partition keys ("3/7") present in a just-written version
-        directory, from the c0=../c1=.. layout (local FS, like the
-        manifests)."""
-        ndims = self.spec.ndims
-        keys = []
-        for root, _dirs, files in os.walk(vdir):
-            if not any(f.endswith(".parquet") for f in files):
-                continue
-            rel = os.path.relpath(root, vdir)
-            parts = [
-                seg.split("=", 1)[1]
-                for seg in rel.split(os.sep)
-                if "=" in seg
-            ]
-            if len(parts) == ndims:
-                keys.append("/".join(str(int(p)) for p in parts))
-        return keys
 
     def vacuum_snapshots(self, retain_last: int = 1) -> int:
         """Drop manifests older than the newest ``retain_last`` and
@@ -1117,6 +1117,13 @@ class World:
         """Full-scan seed (reference src/world.rs:332-335)."""
         return Select.all(self.spec)
 
+    def _empty_dims(self) -> DataFrame:
+        """Empty world: just the dim columns, in the same declared
+        types a non-empty world reads back."""
+        return self.spark.createDataFrame(
+            [], ", ".join(f"`{d.name}` {d.spark_type}" for d in self.spec.dims)
+        )
+
     def snapshot(self, version: int | None = None) -> DataFrame:
         """Current logical state: on-disk chunks merged with the pending
         buffer (the reference's iterator merges buffered chunks with IO
@@ -1142,16 +1149,13 @@ class World:
                 for v in reversed(self.snapshot_versions()):
                     # a dir is only readable if it holds actual parquet
                     # (an all-deleted commit leaves _SUCCESS alone)
-                    if self._written_partitions(self._version_dir(v)):
+                    if self._partitions(self._version_dir(v)):
                         return (
                             self.spark.read.parquet(self._version_dir(v))
                             .drop(*self.partition_cols())
                             .limit(0)
                         )
-                schema = T.StructType(
-                    [T.StructField(d.name, T.LongType()) for d in self.spec.dims]
-                )
-                return self.spark.createDataFrame([], schema)
+                return self._empty_dims()
             return pinned.drop(*self.partition_cols())
         base = self._base()
         live, touched = self._resolved_pending()
@@ -1159,11 +1163,7 @@ class World:
         if base is not None:
             base = base.drop(*self.partition_cols())
         if base is None and live is None:
-            # empty world with just the dim columns
-            schema = T.StructType(
-                [T.StructField(d.name, T.LongType()) for d in self.spec.dims]
-            )
-            return self.spark.createDataFrame([], schema)
+            return self._empty_dims()
         if live is None:
             return base
         if base is None:
@@ -1320,10 +1320,12 @@ class World:
 
     def flush(self) -> int:
         """Persist the pending buffer: rewrite exactly the dirty chunks
-        via dynamic partition overwrite (the reference's whole-chunk
-        rewrite, src/world.rs:96-122 + tokio-fs/src/lib.rs:85-107).
-        With ``validate="flush"`` the domain check rides along as
-        raise_error guards in the same pass. Returns ops flushed."""
+        and publish them through ``_publish`` (the reference's
+        whole-chunk rewrite, src/world.rs:96-122 +
+        tokio-fs/src/lib.rs:85-107). With ``validate="flush"`` the
+        domain check rides along as raise_error guards in the same
+        pass. A failed flush leaves the pre-flush state readable and
+        the ops pending for a retry. Returns ops flushed."""
         with self._lock:
             n_ops = len(self._ops)
             if not n_ops:
@@ -1352,33 +1354,17 @@ class World:
         base = self._base()
 
         if base is None:
-            out = self._with_partition_cols(live)
-            if self.versioned:
-                self._commit_version_write(out)
-            else:
-                self._writer_lock.verify_token()  # fence the overwrite
-                # per-write dynamic mode, like the dirty-partition path
-                # below and compact(): a session left at Spark's STATIC
-                # default would otherwise delete-and-recreate the whole
-                # directory (correctness must not depend on session
-                # conf — the round-14 driver session proved it doesn't
-                # set this)
-                (
-                    out.write.partitionBy(*self.partition_cols())
-                    .mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(self.path)
-                )
+            self._publish(self._with_partition_cols(live))
             return
 
         # dirty physical partitions = those holding any touched id
         # (old location: deletes/relocations) or any new row (new
         # location) — both sides, so a relocated row vanishes from
         # its old chunk and appears in the new one atomically.
-        # Materialized once (it is small: partition keys only) and used
+        # Collected once (it is small: partition keys only) and used
         # BOTH as the semi-join filter — never a driver-built OR chain,
         # which blows up planning past a few thousand dirty partitions —
-        # and as the driver-side list for empty-directory cleanup.
+        # and as the publish's set of partitions to clear.
         base_touched = base.join(touched, on=id_col, how="left_semi")
         old_parts = base_touched.select(*self.partition_cols()).distinct()
         new_parts = (
@@ -1387,13 +1373,9 @@ class World:
             .distinct()
         )
         # ONE action: collect the dirty set and rebuild the filter
-        # relation locally — the former materialize-then-collect pair
-        # paid a checkpoint job just to read back rows the driver needs
-        # anyway (the set is partition keys only, bounded by chunk
-        # count, and both consumers see the identical collected rows)
+        # relation locally (both consumers see the identical rows)
         dirty_rows = old_parts.unionByName(new_parts).distinct().collect()
-        dirty = [tuple(r) for r in dirty_rows]
-        if not dirty:
+        if not dirty_rows:
             return
         dirty_df = self.spark.createDataFrame(dirty_rows, old_parts.schema)
 
@@ -1403,38 +1385,37 @@ class World:
         kept = base_part.join(touched, on=id_col, how="left_anti")
         live_cast = self._align_to(live, base_part)
         merged = kept.unionByName(live_cast, allowMissingColumns=True)
-        out = self._with_partition_cols(merged)
-        if self.versioned:
-            # fresh immutable version dir: no self-overwrite, so no
-            # materialization barrier; vanished partitions drop out of
-            # the manifest instead of needing directory cleanup
-            self._commit_version_write(
-                out, {"/".join(str(int(x)) for x in pos) for pos in dirty}
-            )
-            return
-        # STAGE-AND-SWAP instead of materialize-then-self-overwrite:
-        # ``out`` reads the very files a dynamic overwrite of
-        # ``self.path`` would delete, which forced an eager
-        # materialization barrier (a full extra pass over the flushed
-        # rows) before every non-versioned flush. Writing to a sibling
-        # staging directory needs no barrier — the ONE write job both
-        # computes and commits the merged dirty partitions — and
-        # publish is a per-partition directory swap (local-FS renames,
-        # bounded by the dirty-partition count, the same move-based
-        # commit Spark's own dynamic overwrite performs internally).
-        # ``out`` contains ONLY dirty-partition rows by construction
+        # ``out`` holds ONLY dirty-partition rows by construction
         # (base_part is semi-join-filtered to the dirty set, and every
-        # live row's partition is dirty), so: a staged dir exists ->
-        # the partition's new contents; no staged dir -> every row the
-        # dirty partition held relocated away, clear it (the reference
-        # rewrites every dirty chunk, even to empty:
-        # src/world.rs:96-122 skips moved items but still writes).
-        #
-        # The swap never deletes an old partition before every swap has
-        # succeeded: each is renamed ASIDE first, and a failure at any
-        # partition moves the new ones out and the old ones back, so
-        # the world reads its complete pre-flush state and the ops stay
-        # pending for a retry.
+        # live row's partition is dirty); a dirty partition it does not
+        # write had every row relocated or deleted and is cleared (the
+        # reference rewrites every dirty chunk, even to empty:
+        # src/world.rs:96-122 skips moved items but still writes)
+        self._publish(
+            self._with_partition_cols(merged),
+            {self._part_key(r) for r in dirty_rows},
+        )
+
+    def _publish(
+        self, out: DataFrame, dirty_keys: set[str] = frozenset()
+    ) -> None:
+        """The one publish step of every World write (first flush,
+        flush, compact): each partition ``out`` (rows + partition
+        cols) writes gets exactly ``out``'s rows, and each key in
+        ``dirty_keys`` that ``out`` does not write is cleared.
+
+        Versioned worlds commit a fresh immutable version and a
+        manifest. Plain worlds STAGE AND SWAP: ``out`` — which may read
+        the very files it replaces — is written once to a sibling
+        staging directory, then each partition of staged ∪ dirty_keys
+        is swapped in by local-FS renames. The swap never deletes an
+        old partition before every swap has succeeded: each is renamed
+        ASIDE first, and a failure at any partition moves the new ones
+        out and the old ones back, so the world reads its complete
+        previous state and the caller can retry."""
+        if self.versioned:
+            self._commit_version_write(out, dirty_keys)
+            return
         staging = f"{self.path}.staging-{uuid.uuid4().hex[:12]}"
         aside = f"{staging}.aside"
         try:
@@ -1443,21 +1424,21 @@ class World:
                 .mode("overwrite")
                 .parquet(staging)
             )
+            staged = self._partitions(staging)
             self._writer_lock.verify_token()  # fence the swap
             swapped = []  # (dst, its aside copy or None), in swap order
             try:
-                for pos in dirty:
-                    dst = self._part_dir(pos)
-                    src = self._part_dir(pos, staging)
+                for key in staged.keys() | dirty_keys:
+                    dst = self._part_dir(key)
                     old = None
                     if os.path.isdir(dst):
-                        old = self._part_dir(pos, aside)
+                        old = self._part_dir(key, aside)
                         os.makedirs(os.path.dirname(old), exist_ok=True)
                         os.rename(dst, old)
                     swapped.append((dst, old))
-                    if os.path.isdir(src):
+                    if key in staged:
                         os.makedirs(os.path.dirname(dst), exist_ok=True)
-                        shutil.move(src, dst)
+                        shutil.move(staged[key], dst)
             except BaseException:
                 for dst, old in reversed(swapped):
                     shutil.rmtree(dst, ignore_errors=True)
@@ -1469,10 +1450,10 @@ class World:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
-    def _part_dir(self, pos, root: str | None = None) -> str:
-        return "/".join(
-            [root or self.path]
-            + [f"{c}={int(v)}" for c, v in zip(self.partition_cols(), pos)]
+    def _part_dir(self, key: str, root: str | None = None) -> str:
+        return os.path.join(
+            root or self.path,
+            *[f"{c}={v}" for c, v in zip(self.partition_cols(), key.split("/"))],
         )
 
     def zvalue(self) -> F.Column:
@@ -1513,11 +1494,10 @@ class World:
         """Rewrite fragmented physical partitions down to one file each,
         rows sorted by id within the file.
 
-        Every flush appends-by-overwrite at whole-partition granularity,
-        but a long upsert history still fragments partitions written by
-        different Spark jobs (and at 100 TB the small-file problem is
-        the #1 scan-throughput killer: each file costs a task + a
-        footer read). Compaction = the reference's whole-chunk rewrite
+        Every flush rewrites at whole-partition granularity, but its
+        write job can still leave several files per partition (and at
+        100 TB the small-file problem is the #1 scan-throughput killer:
+        each file costs a task + a footer read). Compaction = the reference's whole-chunk rewrite
         (src/world.rs:96-122) applied for layout instead of
         durability; sorting by id restores the BTreeMap order
         (src/world.rs:25) so parquet row-group min/max stats prune id
@@ -1530,9 +1510,10 @@ class World:
         on secondary dims as often as on id.
 
         Only partitions holding more than ``max_files_per_partition``
-        files are rewritten. Requires a clean buffer (flush first) so
-        the rewrite cannot race pending ops. Returns the number of
-        partitions compacted."""
+        files are rewritten, and they publish through ``_publish`` with
+        the same rollback as ``flush``. Requires a clean buffer (flush
+        first) so the rewrite cannot race pending ops. Returns the
+        number of partitions compacted."""
         if order not in ("id", "zorder"):
             raise ValueError("order must be 'id' or 'zorder'")
         with self._lock:
@@ -1548,21 +1529,21 @@ class World:
             if base is None:
                 return 0
             pcols = self.partition_cols()
-            # small (partition keys only): materialize once, use as a
-            # broadcast semi-join filter — thousands of fragmented
-            # partitions are the NORMAL state at scale, and a
-            # driver-built OR chain over them blows up planning
-            frag_df = (
+            # small (partition keys only): collect once and rebuild as
+            # a broadcast semi-join filter, as flush does — thousands
+            # of fragmented partitions are the NORMAL state at scale,
+            # and a driver-built OR chain over them blows up planning
+            frag = (
                 base.select(*pcols, F.input_file_name().alias("__f"))
                 .groupBy(*pcols)
                 .agg(F.count_distinct("__f").alias("__nf"))
                 .filter(F.col("__nf") > max_files_per_partition)
                 .select(*pcols)
-                .transform(materialize)
             )
-            n_frag = frag_df.count()
-            if not n_frag:
+            frag_rows = frag.collect()
+            if not frag_rows:
                 return 0
+            frag_df = self.spark.createDataFrame(frag_rows, frag.schema)
             id_col = self.spec.id_dim.name
             sort_key = self.zvalue() if order == "zorder" else F.col(id_col)
             out = (
@@ -1572,22 +1553,9 @@ class World:
                 .repartition(*[F.col(c) for c in pcols])
                 .sortWithinPartitions(*pcols, sort_key)
             )
-            if self.versioned:
-                keys = {self._part_key(r) for r in frag_df.collect()}
-                self._commit_version_write(out, keys)
-            else:
-                # materialize before self-overwrite (fresh version dirs
-                # don't need the barrier)
-                out = out.transform(materialize)
-                self._writer_lock.verify_token()  # fence the overwrite
-                (
-                    out.write.partitionBy(*pcols)
-                    .mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(self.path)
-                )
+            self._publish(out, {self._part_key(r) for r in frag_rows})
             self._writer_lock.data_version += 1  # invalidate base caches
-            return n_frag
+            return len(frag_rows)
 
     def stats(self) -> DataFrame:
         """ANALYZE-style storage profile: one row per physical

@@ -549,23 +549,48 @@ def test_failed_flush_keeps_generation(spark, world, count_resolutions):
     world.close()
 
 
-def test_flush_swap_failure_restores_pre_flush_state(spark, tmp_path, monkeypatch):
-    """Fault injection on the stage-and-swap publish: the move of
-    partition k of n raises. The flush must roll back every swapped
-    partition, so a fresh World reads the complete pre-flush state
-    (every row, old values), the ops stay pending, no staging debris
-    is left, and a retry publishes the new state."""
+def _files_per_partition(path):
+    return {
+        d: len([f for f in files if f.endswith(".parquet")])
+        for d, _, files in os.walk(path)
+        if any(f.endswith(".parquet") for f in files)
+    }
+
+
+def _check_swap_failure_rollback(spark, tmp_path, monkeypatch, case):
+    """Fault injection on the stage-and-swap publish every World write
+    goes through: the move of partition k of n raises. The write must
+    roll back every swapped partition, so a fresh World reads the
+    complete previous state (every row, old values, the same files per
+    partition), the ops stay pending, no staging debris is left, and a
+    retry publishes the new state."""
     import shutil
 
     path = str(tmp_path / "w")
     w = World(spark, spec_1024(), path, physical_factors=(1, 1))
-    before = [(i, 5, i) for i in range(32)]  # 4 partitions: c0=0..3
-    w.upsert(spark.createDataFrame(before, ["dim0", "dim1", "v"]))
-    w.flush()
-    after = [(i, 5, 100 + i) if i % 2 == 0 else (i, 5, i) for i in range(32)]
-    w.upsert(spark.createDataFrame(
-        [r for r in after if r[2] >= 100], ["dim0", "dim1", "v"]
-    ))
+    rows = [(i, 5, i) for i in range(32)]  # 4 partitions: c0=0..3
+    w.upsert(spark.createDataFrame(rows, ["dim0", "dim1", "v"]))
+    if case == "first_flush":
+        before, after, pending, write = [], rows, 1, w.flush
+    elif case == "subsequent_flush":
+        w.flush()
+        after = [(i, 5, 100 + i) if i % 2 == 0 else (i, 5, i) for i in range(32)]
+        w.upsert(spark.createDataFrame(
+            [r for r in after if r[2] >= 100], ["dim0", "dim1", "v"]
+        ))
+        before, pending, write = rows, 1, w.flush
+    else:
+        # without AQE the flush writes each partition from several
+        # tasks: every partition is fragmented, so compact moves 4
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            w.flush()
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        before, after, pending, write = rows, rows, 0, w.compact
+    files = _files_per_partition(path)
+    if case == "compact":
+        assert len(files) == 4 and min(files.values()) > 1
 
     real_move = shutil.move
     moves = []
@@ -578,18 +603,60 @@ def test_flush_swap_failure_restores_pre_flush_state(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(shutil, "move", flaky_move)
     with pytest.raises(OSError, match="injected"):
-        w.flush()
+        write()
     monkeypatch.setattr(shutil, "move", real_move)
     assert len(moves) == 3  # failed on partition 3 of 4
 
     fresh = World(spark, spec_1024(), path, physical_factors=(1, 1))
+    assert fresh.exists() == bool(before)
     got = _vrows(fresh.snapshot())
     assert len(got) == len(before)  # row conservation
     assert got == before
+    assert _files_per_partition(path) == files
     assert not [e for e in os.listdir(tmp_path) if ".staging-" in e]
-    assert w.writes == 1
+    assert w.writes == pending
 
-    assert w.flush() == 1  # the retry publishes the new state
+    assert write() == (4 if case == "compact" else 1)  # the retry
     again = World(spark, spec_1024(), path, physical_factors=(1, 1))
     assert _vrows(again.snapshot()) == after
+    if case == "compact":
+        assert set(_files_per_partition(path).values()) == {1}
     w.close()
+
+
+def test_flush_swap_failure_restores_pre_flush_state(spark, tmp_path, monkeypatch):
+    """A flush over an existing world that fails mid-swap leaves the
+    pre-flush state readable and its ops pending."""
+    _check_swap_failure_rollback(spark, tmp_path, monkeypatch, "subsequent_flush")
+
+
+@pytest.mark.parametrize("case", ["first_flush", "compact"])
+def test_write_swap_failure_restores_previous_state(
+    spark, tmp_path, monkeypatch, case
+):
+    """The same rollback holds for a first flush (nothing published
+    before) and for compact."""
+    _check_swap_failure_rollback(spark, tmp_path, monkeypatch, case)
+
+
+@pytest.mark.parametrize("uri", ["hdfs://nn:8020/w", "s3a://bucket/w"])
+def test_non_local_path_refused(spark, uri):
+    """The publish swap, manifests, zone maps and writer lock are all
+    local-FS: a path they cannot publish to is refused up front, before
+    any lock is interned for it."""
+    from dmds_spark.world import WriterLock
+
+    with pytest.raises(ValueError, match="local"):
+        World(spark, spec_1024(), uri)
+    assert os.path.realpath(uri) not in WriterLock._BY_DIR
+
+
+def test_file_uri_path_roundtrips_a_flush(spark, tmp_path):
+    path = str(tmp_path / "w")
+    w = World(spark, spec_1024(), f"file://{path}", physical_factors=(1, 1))
+    assert w.path == path
+    w.insert_rows([{"dim0": 114, "dim1": 514, "v": 1}])
+    w.flush()
+    w.close()
+    fresh = World(spark, spec_1024(), path, physical_factors=(1, 1))
+    assert _vrows(fresh.snapshot()) == [(114, 514, 1)]

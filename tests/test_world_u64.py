@@ -94,6 +94,18 @@ def test_u64_crud_roundtrip(spark, uworld):
     assert {r[0] for r in _rows(uworld)} == {SMALL, NEAR_MAX}
 
 
+def test_empty_u64_world_reads_declared_dim_types(spark, uworld):
+    """An empty World reads back the same dim types as one holding
+    rows: the u64 id is decimal(20,0) either way."""
+    declared = [(d.name, d.spark_type) for d in SPEC.dims]
+    assert uworld.snapshot().dtypes == declared
+    assert uworld.read(uworld.select_all()).dtypes == declared
+    uworld.insert_rows([{"id": SMALL, "t": 3, "v": "a"}])
+    assert uworld.snapshot().select("id", "t").dtypes == declared
+    uworld.flush()
+    assert uworld.snapshot().select("id", "t").dtypes == declared
+
+
 def test_u64_point_get_and_range_select(spark, uworld):
     uworld.insert_rows(
         [
